@@ -89,9 +89,12 @@ import json
 import re
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .sink import _norm_stat
 
 _SNAP_DIR = "_snapshots"
 _MARKER_RE = re.compile(r"^latest-(\d+)$")
@@ -744,76 +747,6 @@ def _group_rels(rels: list[str], partition_by: list[str] | None) -> dict[str, li
     return out
 
 
-def _collect_dir_stats(
-    spark: SparkSession, table: str, rels: list[str], stats_cols: list[str]
-) -> dict[str, dict[str, list]]:
-    """Per-directory zone maps (min/max per stat column) for a commit's
-    just-written dirs — the Iceberg/Delta data-skipping statistic, here
-    at dir granularity to match the manifest's unit of reference.
-
-    Collected by reading BACK the commit's own files grouped on
-    ``_metadata.file_path``'s dirname (one commit-sized scan) rather
-    than re-deriving hive dir names from partition VALUES — Spark's dir
-    naming (null → __HIVE_DEFAULT_PARTITION__, URL-escaping) would have
-    to be replicated exactly, and a mismatch would silently attach stats
-    to a nonexistent dir. Matching on the physical path cannot drift.
-    Values serialize as JSON numbers (ints/floats) or strings
-    (everything else via ``str`` — ISO timestamps/dates compare
-    lexicographically), the same normalization the read-side overlap
-    test applies."""
-    commit_id = rels[0].split("/")[1]
-    base = f"{table}/data/{commit_id}"
-    # ``rels`` is always the COMPLETE dir set of one just-written commit
-    # (every caller passes _write_commit_data's return), so scanning the
-    # commit dir itself is the identical file set — one driver-side
-    # recursive listing instead of len(rels) sequential per-dir listings
-    # (30-dir date-partitioned commits measured ~0.2-0.3 s of pure
-    # listing per stats call; guide §6 small-file/listing cost).
-    df = spark.read.option("basePath", base).parquet(base)
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = (
-        df.withColumn(
-            "_dir", F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
-        )
-        .groupBy("_dir")
-        .agg(*aggs)
-        .collect()
-    )
-
-    def norm(v):
-        return v if isinstance(v, (int, float)) and not isinstance(v, bool) else (
-            None if v is None else str(v)
-        )
-
-    out: dict[str, dict[str, list]] = {}
-    for r in rows:
-        # absolute file URI -> table-relative dir, by suffix match
-        rel = next((x for x in rels if r["_dir"].endswith(x)), None)
-        if rel is None:
-            # The commit-dir scan above is only the same file set as
-            # ``rels`` when rels is the COMPLETE dir set of the commit
-            # (every current caller passes _write_commit_data's full
-            # return). A future caller passing a SUBSET would silently
-            # compute stats from files outside its rels — fail loudly
-            # instead, making the complete-commit invariant part of the
-            # contract.
-            raise AssertionError(
-                f"_collect_dir_stats scanned dir {r['_dir']!r} not in the "
-                f"caller's rels for commit {commit_id}: rels must be the "
-                "complete dir set of one just-written commit"
-            )
-        stats = {}
-        for c in stats_cols:
-            lo, hi = norm(r[f"_lo_{c}"]), norm(r[f"_hi_{c}"])
-            if lo is not None and hi is not None:
-                stats[c] = [lo, hi]
-        if stats:
-            out[rel] = stats
-    return out
-
-
 #: Per-dir bloom sizing: 8192 bits (1 KiB -> 2048 hex chars in the
 #: manifest) × 6 hashes ≈ 1% false positives at ~850 distinct keys/dir,
 #: saturating gracefully (a full bloom prunes nothing but stays correct).
@@ -829,43 +762,56 @@ _MERGE_BLOOM_PROBE_CAP = 1024
 
 def _bloom_py_positions(value, m: int, k: int) -> list[int]:
     """Kirsch-Mitzenmacher bit positions for one key — PYTHON twin of the
-    JVM expression in :func:`_collect_dir_blooms`: 60 bits of
+    JVM expression in :func:`_collect_dir_meta`: 60 bits of
     md5(str(value)), split into (h1, h2|1), positions (h1 + i·h2) mod m.
     md5-over-the-string rather than xxhash64 so the prune side can probe
     WITHOUT a Spark job and the construction stays engine-portable."""
-    import hashlib
-
     h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16)
     h1, h2 = h % (1 << 30), (h >> 30) | 1
     return [(h1 + i * h2) % m for i in range(k)]
 
 
-def _collect_dir_blooms(
+def _collect_dir_meta(
     spark: SparkSession,
     table: str,
     rels: list[str],
-    bloom_cols: list[str],
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
     m: int = _BLOOM_M,
-    k: int = _BLOOM_K,
-) -> dict[str, dict[str, dict]]:
-    """Per-directory BLOOM FILTERS over point-lookup key columns — the
-    membership complement of :func:`_collect_dir_stats`' range zone
-    maps: min/max prunes key-CLUSTERED tables, but a GDPR-style delete
-    by user id on a time-partitioned table intersects every dir's key
-    range — a per-dir bloom answers "could this key live here?" per
-    directory regardless of clustering. Collected like the zone maps
-    (read back the commit's own files grouped on the physical dir), bits
-    set by a JVM md5 expression whose python twin
-    (:func:`_bloom_py_positions`) probes with no Spark job. NULLs set no
-    bits (a point probe ``col = NULL`` matches nothing). Float/double
-    key columns are rejected — their string forms are not a stable
-    equality domain."""
-    if m < 64 or m % 8:
+) -> tuple[dict | None, dict | None]:
+    """Per-directory manifest metadata for a commit's just-written dirs,
+    as ``(stats, blooms)`` from ONE read-back job; each is ``None`` when
+    its column list is empty, both when ``rels`` is. ZONE MAPS are the
+    min/max per ``stats_cols`` column (the Iceberg/Delta data-skipping
+    statistic, at dir granularity to match the manifest's unit of
+    reference), normalized by :func:`sink._norm_stat` like the read-side
+    overlap test. BLOOM FILTERS over ``bloom_cols`` are their membership
+    complement: min/max prunes key-CLUSTERED tables, but a GDPR-style
+    delete by user id on a time-partitioned table intersects every dir's
+    key range, while a per-dir bloom answers "could this key live here?"
+    regardless of clustering. Bits are set by a JVM md5 expression whose
+    python twin (:func:`_bloom_py_positions`) probes with no Spark job;
+    NULLs set no bits (a point probe ``col = NULL`` matches nothing).
+
+    Both are read BACK from the commit's own files grouped on
+    ``_metadata.file_path``'s dirname rather than re-deriving hive dir
+    names from partition VALUES — Spark's dir naming (null →
+    __HIVE_DEFAULT_PARTITION__, hive escaping) would have to be
+    replicated exactly, and a mismatch would silently attach metadata to
+    a nonexistent dir. Matching on the physical path cannot drift."""
+    if not rels or not (stats_cols or bloom_cols):
+        return None, None
+    stats_cols, bloom_cols = stats_cols or [], bloom_cols or []
+    if bloom_cols and (m < 64 or m % 8):
         raise ValueError(f"bloom_bits must be a multiple of 8 >= 64, got {m}")
     commit_id = rels[0].split("/")[1]
     base = f"{table}/data/{commit_id}"
-    # single-path read of the whole commit dir — same file set as rels
-    # (see _collect_dir_stats), one listing instead of len(rels)
+    # ``rels`` is always the COMPLETE dir set of one just-written commit
+    # (every caller passes _write_commit_data's return), so scanning the
+    # commit dir itself is the identical file set — one driver-side
+    # recursive listing instead of len(rels) sequential per-dir listings
+    # (30-dir date-partitioned commits measured ~0.2-0.3 s of pure
+    # listing per read-back; guide §6 small-file/listing cost).
     df = spark.read.option("basePath", base).parquet(base)
     # WHITELIST, not blacklist: bits are set from the JVM
     # CAST(col AS STRING) but probed with python str(value), and the two
@@ -888,54 +834,74 @@ def _collect_dir_blooms(
     df = df.withColumn(
         "_dir", F.expr("regexp_replace(_metadata.file_path, '/[^/]+$', '')")
     )
-    # ONE read-back job for every bloom column (the zone-map collector's
-    # one-pass shape): each row contributes k positions per column as
-    # (column index, position) pairs, flattened and exploded once, then
-    # a single (_dir, column) collect_set. NULLs contribute no pairs
-    # (md5(NULL) is NULL -> the struct's pos is NULL -> filtered).
-    pairs = []
-    for ci, c in enumerate(bloom_cols):
-        h = F.conv(
-            F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        h1 = F.pmod(h, F.lit(1 << 30))
-        h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
-        pairs += [
-            F.struct(
-                F.lit(ci).alias("ci"),
-                F.pmod(h1 + F.lit(i) * h2, F.lit(m)).alias("pos"),
-            )
-            for i in range(k)
-        ]
-    rows = (
-        df.select("_dir", F.explode(F.array(*pairs)).alias("_cp"))
-        .filter(F.col("_cp.pos").isNotNull())
-        .groupBy("_dir", F.col("_cp.ci").alias("_ci"))
-        .agg(F.collect_set(F.col("_cp.pos")).alias("_ps"))
-        .collect()
-    )
-    out: dict[str, dict[str, dict]] = {}
-    acc: dict[tuple[str, int], bytearray] = {}
+    aggs = []
+    for c in stats_cols:
+        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
+    if bloom_cols:
+        # each row contributes k positions per bloom column as (column
+        # index, position) structs, exploded once and gathered by ONE
+        # collect_set per dir: at most m positions per (dir, column),
+        # never raw keys. A NULL key's pos is NULL (md5(NULL) is NULL);
+        # min/max are unchanged by the duplicated rows.
+        pairs = []
+        for ci, c in enumerate(bloom_cols):
+            h = F.conv(
+                F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10
+            ).cast("long")
+            h1 = F.pmod(h, F.lit(1 << 30))
+            h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
+            pairs += [
+                F.struct(
+                    F.lit(ci).alias("ci"),
+                    F.pmod(h1 + F.lit(i) * h2, F.lit(m)).alias("pos"),
+                )
+                for i in range(_BLOOM_K)
+            ]
+        df = df.withColumn("_cp", F.explode(F.array(*pairs)))
+        aggs.append(F.collect_set("_cp").alias("_ps"))
+    rows = df.groupBy("_dir").agg(*aggs).collect()
+    stats = {} if stats_cols else None
+    blooms = {} if bloom_cols else None
+    rel_set = set(rels)
     for r in rows:
-        rel = next((x for x in rels if r["_dir"].endswith(x)), None)
-        if rel is None:
-            # same complete-commit invariant as _collect_dir_stats: the
-            # whole-commit-dir scan is only equivalent to rels when rels
-            # is the commit's full dir set — a subset caller would get
-            # blooms built from files outside its rels
+        # The file URI re-escapes Spark's hive-escaped dir names ('a b'
+        # reads back as 'a%20b', on-disk 'x%3Ay' as 'x%253Ay'): decode it
+        # once to the on-disk names _write_commit_data listed, then cut
+        # the table-relative dir at the commit's own data/<uuid> segment
+        # (a dir outside it stays absolute and fails the check below).
+        d = unquote(r["_dir"])
+        rel = d[d.find(f"/data/{commit_id}") + 1 :]
+        if rel not in rel_set:
+            # The commit-dir scan above is only the same file set as
+            # ``rels`` when rels is the COMPLETE dir set of the commit
+            # (every current caller passes _write_commit_data's full
+            # return). A future caller passing a SUBSET would silently
+            # compute metadata from files outside its rels — fail loudly
+            # instead, making the complete-commit invariant part of the
+            # contract.
             raise AssertionError(
-                f"_collect_dir_blooms scanned dir {r['_dir']!r} not in "
-                f"the caller's rels for commit {commit_id}: rels must be "
-                "the complete dir set of one just-written commit"
+                f"_collect_dir_meta scanned dir {r['_dir']!r} not in the "
+                f"caller's rels for commit {commit_id}: rels must be the "
+                "complete dir set of one just-written commit"
             )
-        bits = acc.setdefault((rel, r["_ci"]), bytearray(m // 8))
-        for p in r["_ps"]:
-            bits[p // 8] |= 1 << (p % 8)
-    for (rel, ci), bits in acc.items():
-        out.setdefault(rel, {})[bloom_cols[ci]] = {
-            "m": m, "k": k, "bits": bits.hex()
-        }
-    return out
+        zone = {}
+        for c in stats_cols:
+            lo, hi = _norm_stat(r[f"_lo_{c}"]), _norm_stat(r[f"_hi_{c}"])
+            if lo is not None and hi is not None:
+                zone[c] = [lo, hi]
+        if zone:
+            stats[rel] = zone
+        acc: dict[int, bytearray] = {}
+        for ci, p in r["_ps"] if bloom_cols else ():
+            if p is not None:  # NULL keys set no bits
+                bits = acc.setdefault(ci, bytearray(m // 8))
+                bits[p // 8] |= 1 << (p % 8)
+        if acc:
+            blooms[rel] = {
+                bloom_cols[ci]: {"m": m, "k": _BLOOM_K, "bits": bits.hex()}
+                for ci, bits in sorted(acc.items())
+            }
+    return stats, blooms
 
 
 def _bloom_probe_canonical(col: str, value) -> str:
@@ -1670,7 +1636,7 @@ def snapshot_append(
     enabling ``snapshot_read(skip_keys=...)`` /
     ``snapshot_delete_where(prune_keys=...)`` membership pruning even
     where the table is NOT clustered on the key (the GDPR-delete shape —
-    see :func:`_collect_dir_blooms`). Additive
+    see :func:`_collect_dir_meta`, which gathers both in one pass). Additive
     schema evolution is validated BEFORE the data write
     (:func:`_merged_commit_schema`): new columns are fine, a type
     change fails fast with nothing landed.
@@ -1701,13 +1667,8 @@ def snapshot_append(
     rels = _write_commit_data(df, table, partition_by)
     if not rels:
         return read_v
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols
-        else None
+    stats, blooms = _collect_dir_meta(
+        spark, table, rels, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark, table, "append", _group_rels(rels, partition_by), meta=meta,
@@ -1768,11 +1729,6 @@ def snapshot_overwrite_partitions(
         spark, table, df, partition_by, committed=read_v
     )
     rels = _write_commit_data(df, table, partition_by)
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
-    )
     drops = set(drop_partitions or ())
     if not rels and not drops:
         return read_v
@@ -1790,8 +1746,8 @@ def snapshot_overwrite_partitions(
                 "dropped, nothing written) — drop or rebuild the table "
                 "instead (the snapshot_overwrite_all rule)"
             )
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
+    stats, blooms = _collect_dir_meta(
+        spark, table, rels, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark, table, "overwrite", grouped, replaced=set(grouped) | drops,
@@ -2318,8 +2274,6 @@ def _pspec_prune(
     if not ranges and not points:
         return dirs
 
-    from urllib.parse import unquote
-
     def may_match(d: str) -> bool:
         pv = _dir_pvals(d)
         for name, tlo, thi in ranges:
@@ -2434,9 +2388,6 @@ def _zone_prune(
     commit's column map (:func:`_phys_col`)."""
     zone = manifest.get("stats", {})
 
-    def norm(x):
-        return x if isinstance(x, (int, float)) and not isinstance(x, bool) else str(x)
-
     def may_match(d: str) -> bool:
         stats = zone.get(d)
         if not stats:
@@ -2447,7 +2398,7 @@ def _zone_prune(
             if pc not in stats:
                 continue
             dlo, dhi = stats[pc]
-            if norm(lo) > dhi or norm(hi) < dlo:
+            if _norm_stat(lo) > dhi or _norm_stat(hi) < dlo:
                 return False
         return True
 
@@ -2713,6 +2664,8 @@ def _read_dirs_raw_build(
         for fld in f.schema.fields:
             t = fld.dataType.simpleString()  # nullability-insensitive
             if fld.name in pcols:
+                if t == "void":
+                    continue  # NULL-only commit: no family; the union widens it
                 fam = _family(t)
                 pfam = seen_fams.setdefault(fld.name, fam)
                 if pfam != fam:
@@ -2747,6 +2700,10 @@ def _read_dirs_raw_build(
     if pcols:
         data_cols = [c for c in out.columns if c not in pcols]
         out = out.select(*data_cols, *[c for c in pcols if c in out.columns])
+        for c in set(pcols) & set(out.columns) - set(seen_fams):
+            # every scanned commit was NULL-only: a void column that a
+            # rewrite could not write back as a partition key
+            out = out.withColumn(c, F.col(c).cast("string"))
     # partition-column renames are a metadata fold (pcol_log): the scan
     # reconstructs the PHYSICAL path name, this alias exposes the
     # version's logical name — Catalyst pushes logical-name filters
@@ -4044,13 +4001,8 @@ def snapshot_overwrite_all(
             "unreadable empty snapshot; drop or rebuild the table instead"
         )
     current = _load_manifest(spark, table, read_v, branch=branch)
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols) if stats_cols else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols
-        else None
+    stats, blooms = _collect_dir_meta(
+        spark, table, rels, stats_cols, bloom_cols, bloom_bits
     )
     pset = set(partition_by or [])
     return _commit(
@@ -4203,15 +4155,8 @@ def snapshot_delete_where(
             f"never read: {sorted(grouped)} — manifest and data layouts "
             "disagree; rewrite the table with one consistent layout"
         )
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols)
-        if stats_cols and rels
-        else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
+    stats, blooms = _collect_dir_meta(
+        spark, table, rels, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark,
@@ -4974,15 +4919,8 @@ def snapshot_merge_into(
     # they APPEND to untouched partitions / create new ones
     for k, dirs in grouped.items():
         new_partitions.setdefault(k, []).extend(dirs)
-    stats = (
-        _collect_dir_stats(spark, table, rels, stats_cols)
-        if stats_cols and rels
-        else None
-    )
-    blooms = (
-        _collect_dir_blooms(spark, table, rels, bloom_cols, m=bloom_bits)
-        if bloom_cols and rels
-        else None
+    stats, blooms = _collect_dir_meta(
+        spark, table, rels, stats_cols, bloom_cols, bloom_bits
     )
     return _commit(
         spark,

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
@@ -5559,3 +5561,174 @@ def test_read_dirs_frame_memo_reuses_and_invalidates(spark, table, monkeypatch):
     cols = snapshot_read(spark, table).columns
     assert "val" in cols and "v" not in cols  # ident changed -> not stale
     assert len(calls) > n2
+
+
+# ---------------------------------------------------------------------------
+# per-commit metadata read-back: zone maps and blooms in one pass
+# ---------------------------------------------------------------------------
+
+#: the printable characters Spark's hive path escaping rewrites, space
+#: (which the file URI escapes), non-ASCII letters, a plain letter. No
+#: digits, so partition type inference keeps the column a string; no
+#: empty string, which reads back as NULL.
+_HIVE_ALPHABET = " \"#%'*/:=?\\{[]^" + "aéß日"
+
+
+@given(
+    pvals=st.lists(
+        st.one_of(st.none(), st.text(_HIVE_ALPHABET, min_size=1, max_size=4)),
+        min_size=1,
+        max_size=3,
+        unique=True,
+    )
+)
+@example(pvals=["a b", "x:y", "50%off", "é/=?", None])
+@settings(max_examples=4, deadline=None, derandomize=True)
+def test_escaped_partition_values_commit_and_prune(spark, tmp_path_factory, pvals):
+    """Partition values that need hive escaping (NULL lands as
+    __HIVE_DEFAULT_PARTITION__) commit with zone maps and blooms, keep
+    them through a delete rewrite, and skip_where / skip_keys still
+    return exactly the matching rows."""
+    delete_where, _ = _bloom_imports()
+    table = str(tmp_path_factory.mktemp("esc") / "tbl")
+    rows = [
+        (10 * j + i, f"u{10 * j + i}", pv)
+        for j, pv in enumerate(pvals)
+        for i in range(5)
+    ]
+    df = spark.createDataFrame(rows, "id long, u string, p string")
+    kw = {"stats_cols": ["id"], "bloom_cols": ["id", "u"]}
+    snapshot_append(spark, table, df, ["p"], **kw)
+    delete_where(spark, table, "id % 3 = 0", **kw)
+    live = {r[0]: r for r in rows if r[0] % 3}
+    m = _load_manifest(spark, table, current_version(spark, table))
+    dirs = {d for ds in m["partitions"].values() for d in ds}
+    assert set(m["stats"]) == dirs == set(m["blooms"])
+
+    def got(frame, col, values):
+        out = frame.filter(F.col(col).isin(values)).select("id", "u", "p")
+        return sorted(tuple(r) for r in out.collect())
+
+    def want(col, values):
+        i = 0 if col == "id" else 1
+        return sorted(r for r in live.values() if r[i] in values)
+
+    last = 10 * (len(pvals) - 1)
+    ids = list(range(last, last + 5))
+    pruned = snapshot_read(spark, table, skip_where=[("id", last, last + 4)])
+    assert got(pruned, "id", ids) == want("id", ids)
+    for col, probe in (("id", [1, last + 2, 999]), ("u", ["u4", f"u{last + 1}", "u"])):
+        pruned = snapshot_read(spark, table, skip_keys=[(col, probe)])
+        assert got(pruned, col, probe) == want(col, probe)
+    assert got(snapshot_read(spark, table), "id", list(live)) == sorted(live.values())
+
+
+def test_manifest_stats_and_blooms_match_python_twins(spark, table):
+    """Pins the recorded metadata exactly: each dir's zone map is the
+    python min/max of its non-null values, and each bloom's bits are the
+    ones _bloom_py_positions sets for the dir's distinct non-null keys.
+    Partition 5 holds only NULL keys, so it records neither a zone map
+    nor a bloom for ``k``."""
+    from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
+        _BLOOM_K,
+        _bloom_py_positions,
+    )
+
+    rows = [
+        (
+            i % 6,
+            None if i % 6 == 5 or i % 7 == 0 else i * 3,
+            None if i % 4 == 0 else f"u{i % 23}",
+            i / 3,
+        )
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "p int, k long, u string, x double")
+    bits_m = 512
+    snapshot_append(
+        spark, table, df, ["p"], stats_cols=["k", "x"],
+        bloom_cols=["k", "u"], bloom_bits=bits_m,
+    )
+    m = _load_manifest(spark, table, 1)
+    assert len(m["stats"]) == 6
+    for d in m["stats"]:
+        p = int(d.rsplit("=", 1)[1])
+        want_stats, want_blooms = {}, {}
+        for ci, c in ((1, "k"), (3, "x")):
+            vals = [r[ci] for r in rows if r[0] == p and r[ci] is not None]
+            if vals:
+                want_stats[c] = [min(vals), max(vals)]
+        for ci, c in ((1, "k"), (2, "u")):
+            keys = {r[ci] for r in rows if r[0] == p and r[ci] is not None}
+            if not keys:
+                continue
+            bits = bytearray(bits_m // 8)
+            for key in keys:
+                for pos in _bloom_py_positions(key, bits_m, _BLOOM_K):
+                    bits[pos // 8] |= 1 << (pos % 8)
+            want_blooms[c] = {"m": bits_m, "k": _BLOOM_K, "bits": bits.hex()}
+        assert m["stats"][d] == want_stats, d
+        assert m["blooms"][d] == want_blooms, d
+    assert set(m["blooms"]) == set(m["stats"])
+
+
+def test_stats_and_blooms_share_one_read_back(spark, tmp_path):
+    """Adding bloom columns to a stats append costs no extra Spark job:
+    both come out of the same read-back aggregation."""
+    df = spark.createDataFrame(
+        [(i, i % 4, f"u{i}") for i in range(40)], "id long, p int, u string"
+    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(table, **kw):
+        j0 = max(tracker.getJobIdsForGroup(None) or [-1])
+        snapshot_append(spark, table, df, ["p"], **kw)
+        return max(tracker.getJobIdsForGroup(None) or [-1]) - j0
+
+    stats_only = jobs(str(tmp_path / "s"), stats_cols=["id"])
+    both = jobs(str(tmp_path / "sb"), stats_cols=["id"], bloom_cols=["id", "u"])
+    assert both <= stats_only, (both, stats_only)
+
+
+def test_collect_dir_meta_rejects_a_partial_commit(spark, table):
+    """The read-back scans the whole commit dir, which is the same file
+    set as ``rels`` only when rels is the commit's COMPLETE dir set: a
+    subset must fail loudly, never record metadata from files outside
+    it."""
+    from lambda_kafka_to_s3_parquet_spark.operators.snapshots import (
+        _collect_dir_meta,
+        _write_commit_data,
+    )
+
+    df = spark.createDataFrame(
+        [(i, i % 3) for i in range(12)], "id long, p int"
+    )
+    rels = _write_commit_data(df, table, ["p"])
+    assert len(rels) == 3
+    for stats_cols, bloom_cols in ((["id"], None), (None, ["id"])):
+        with pytest.raises(AssertionError, match="complete dir set"):
+            _collect_dir_meta(spark, table, rels[1:], stats_cols, bloom_cols)
+    stats, blooms = _collect_dir_meta(spark, table, rels, ["id"], ["id"])
+    assert set(stats) == set(rels) == set(blooms)
+
+
+def test_null_only_partition_commit_reads_beside_typed_ones(spark, tmp_path):
+    """A commit whose partition values are all NULL writes only
+    __HIVE_DEFAULT_PARTITION__ dirs, from which Spark infers a void
+    partition type. The read must widen it to the other commits' type
+    (or to string when every commit is NULL-only) instead of rejecting
+    the mix, and a rewrite must be able to write it back."""
+    delete_where, _ = _bloom_imports()
+    mixed = str(tmp_path / "mixed")
+    snapshot_append(spark, mixed, spark.createDataFrame([(1, 3)], "id long, p int"), ["p"])
+    snapshot_append(spark, mixed, spark.createDataFrame([(2, None)], "id long, p int"), ["p"])
+    out = snapshot_read(spark, mixed)
+    assert out.schema["p"].dataType.simpleString() == "int"
+    assert _rows(out) == [(1, 3), (2, None)]
+    nulls = str(tmp_path / "nulls")
+    snapshot_append(
+        spark, nulls,
+        spark.createDataFrame([(1, None), (2, None)], "id long, p string"), ["p"],
+    )
+    delete_where(spark, nulls, "id = 1", stats_cols=["id"])
+    assert _rows(snapshot_read(spark, nulls)) == [(2, None)]
